@@ -21,9 +21,10 @@ import nelspark.functions._
  * engines read the same fixture bytes, a stale fixture from an older
  * kernel version would satisfy the oracle vacuously. Each fixture dir
  * therefore carries a `_FIXTURE_TAG` sidecar = md5(generation params |
- * md5 of every compiled class under nelspark/expr | input parquet file
- * metadata). A recompiled kernel, changed params, or regenerated input
- * all change the tag, and a mismatch regenerates the fixture atomically
+ * md5 of the compiled classes of every package in [[kernelPackages]] |
+ * input parquet file metadata). A recompile of any of those packages,
+ * changed params, or regenerated input all change the tag, and a
+ * mismatch regenerates the fixture atomically
  * (temp dir + rename, the Conll.ensureShards contract) — no manual `rm`
  * needed, and readers never observe a half-written fixture.
  */

@@ -25,12 +25,13 @@ class SnapshotStore(spark: SparkSession, root: String) {
 
   private def dir(parts: String*): String = (root +: parts).mkString("/")
 
+  /** A missing path reads as absent. An existing path that cannot be
+    * read throws: reading a corrupt `_snapshots` log as absent would
+    * restart `commit` at id 1 and overwrite `<stage>/snapshot=1`. */
   private def readOpt(path: String): Option[DataFrame] =
-    if (new java.io.File(path).exists())
-      try Some(spark.read.parquet(path)) catch { case _: Exception => None }
-    else None
+    if (new java.io.File(path).exists()) Some(spark.read.parquet(path)) else None
 
-  /** The _snapshots log (empty frame when no snapshot committed yet). */
+  /** The _snapshots log (None when no snapshot committed yet). */
   def snapshots: Option[DataFrame] = readOpt(dir("_snapshots"))
 
   def latest(stage: String, conf: String): Option[(Long, DataFrame)] =

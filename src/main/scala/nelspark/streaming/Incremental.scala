@@ -20,9 +20,27 @@ import nelspark.pipeline._
  *      incident to affected components; untouched components keep
  *      their cluster ids verbatim.
  *
- * State tables are plain DataFrames here; a production loop persists
- * them as [[nelspark.store.SnapshotStore]] snapshots per micro-batch,
- * which also gives resume-on-failure for free.
+ * Lineage contract: four boundary frames are materialized once with an
+ * eager `localCheckpoint()`, so each batch plans its DAG once:
+ *
+ *   - `newMentions`, `newVecs` and `newEdges` are each read by several
+ *     downstream queries (keys, pairs, scoring, the affected subgraph
+ *     and the returned state); as checkpoints they are computed once
+ *     and appear in those plans as leaves;
+ *   - the returned `assignments` reads `state.assignments` three times,
+ *     so without a cut a chain of batches grows its plan geometrically.
+ *
+ * A `.cache()`d frame would keep its full logical plan, which every
+ * later query re-analyzes, matches against the cache and re-plans under
+ * AQE; a local checkpoint is a leaf. The returned `mentions`, `vecs` and
+ * `edges` are the prior state unioned with checkpointed frames, so their
+ * plans grow linearly with the number of chained batches.
+ *
+ * Local-checkpoint blocks live in the executors' block managers and do
+ * not survive executor loss. Resume-on-failure therefore comes from
+ * committing the returned state per micro-batch with
+ * [[nelspark.store.SnapshotStore]]`.commit` and continuing from the
+ * re-read frames, which also resets the linear growth above.
  *
  * Known approximation (documented): per-batch IDF is computed from the
  * batch corpus, not re-fitted globally each batch — tf-idf drifts
@@ -48,8 +66,8 @@ object Incremental {
       cfg: ErConfig = ErConfig()): State = {
     val extracted = Extract(newPages)
     val newMentions = Mentions(extracted, cfg)
-      .select("mention_id", "url", "name_norm", "ctx_sig").cache()
-    val newVecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
+      .select("mention_id", "url", "name_norm", "ctx_sig").localCheckpoint()
+    val newVecs = Tfidf.pageVectors(extracted, cfg.ctxTopK).localCheckpoint()
     val vecs = state.vecs.unionByName(newVecs).dropDuplicates("url")
 
     // candidate pairs: new×new ∪ new×old-in-touched-blocks
@@ -69,7 +87,7 @@ object Incremental {
       .dropDuplicates("a_id", "b_id")
 
     val newEdges = Score.edges(Score(newPairs, unionMentions, vecs, cfg), cfg)
-      .cache()
+      .localCheckpoint()
 
     // affected components: any prior component touching a new edge
     val touchedIds = newEdges.select(col("a_id").as("mention_id"))
@@ -102,6 +120,7 @@ object Incremental {
       state.edges.unionByName(newEdges.select("a_id", "b_id"))
         .dropDuplicates("a_id", "b_id"),
       untouched.select("mention_id", "cluster_id")
-        .unionByName(subAssign.select("mention_id", "cluster_id")))
+        .unionByName(subAssign.select("mention_id", "cluster_id"))
+        .localCheckpoint())
   }
 }

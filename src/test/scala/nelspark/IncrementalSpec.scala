@@ -2,27 +2,35 @@ package nelspark
 
 import nelspark.gen.CorpusGen
 import nelspark.pipeline._
+import nelspark.store.SnapshotStore
 import nelspark.streaming.Incremental
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import java.nio.file.Files
 
 /** S4 incremental clustering: batch-wise micro-batches converge to the
   * same clusters as one full batch run over the union. */
 class IncrementalSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Order-independent assignment checksum. */
+  private def checksum(assign: DataFrame): Long = {
+    val r = assign.agg(expr("bit_xor(xxhash64(mention_id, cluster_id))")).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  /** `pages` split by url hash into `n` disjoint micro-batches. */
+  private def batches(pages: DataFrame, n: Int): Seq[DataFrame] =
+    (0 until n).map(b => pages.filter(pmod(xxhash64(col("url")), lit(n)) === b))
+
   test("two micro-batches equal one full run (same clusters)") {
     val gen = CorpusGen.generate(spark, 800L, 160L).cache()
     val pages = CorpusGen.pages(gen).cache()
-    val half1 = pages.filter(pmod(xxhash64(col("url")), lit(2)) === 0)
-    val half2 = pages.filter(pmod(xxhash64(col("url")), lit(2)) === 1)
+    val Seq(half1, half2) = batches(pages, 2)
 
     // incremental: batch1 then batch2
     var st = Incremental.empty(spark)
     st = Incremental.processBatch(spark, st, half1)
-    // stabilize intermediate state (avoids recomputing batch1 lineage)
-    st = Incremental.State(st.mentions.localCheckpoint(true),
-      st.vecs.localCheckpoint(true), st.edges.localCheckpoint(true),
-      st.assignments.localCheckpoint(true))
     st = Incremental.processBatch(spark, st, half2)
 
     // full batch over the union
@@ -48,5 +56,57 @@ class IncrementalSpec extends SparkSpec {
     val agreement = agree.toDouble / total
     info(s"pairwise co-clustering agreement incremental vs batch: $agreement")
     assert(agreement >= 0.995, s"agreement $agreement")
+  }
+
+  test("chained micro-batches keep plans linear without a caller-side cut") {
+    val gen = CorpusGen.generate(spark, 240L, 48L).cache()
+    val pages = CorpusGen.pages(gen).cache()
+    def nodes(df: DataFrame): Int = df.queryExecution.analyzed.collect { case p => p }.size
+
+    var st = Incremental.empty(spark)
+    val sizes = batches(pages, 10).map { b =>
+      st = Incremental.processBatch(spark, st, b)
+      Seq(st.mentions, st.vecs, st.edges, st.assignments).map(nodes)
+    }
+    info(s"analyzed plan nodes (mentions, vecs, edges, assignments) per batch: " +
+      sizes.map(_.mkString("(", ",", ")")).mkString(" "))
+    Seq("mentions", "vecs", "edges", "assignments").zipWithIndex.foreach { case (f, i) =>
+      assert(sizes(9)(i) <= 2 * sizes(4)(i),
+        s"$f plan grew superlinearly: ${sizes(4)(i)} nodes at batch 5, ${sizes(9)(i)} at batch 10")
+    }
+
+    val nAssigned = st.assignments.count()
+    val nDistinct = st.assignments.select("mention_id").distinct().count()
+    val nMentions = st.mentions.count()
+    assert(nMentions > 0)
+    assert(nAssigned == nDistinct && nDistinct == nMentions,
+      s"$nAssigned assignments, $nDistinct assigned mentions, $nMentions mentions")
+  }
+
+  test("chained in memory and committed-and-reread between batches give the same clusters") {
+    val gen = CorpusGen.generate(spark, 400L, 80L).cache()
+    val pages = CorpusGen.pages(gen).cache()
+    val bs = batches(pages, 2)
+
+    val inMemory = bs.foldLeft(Incremental.empty(spark)) { (st, b) =>
+      Incremental.processBatch(spark, st, b)
+    }
+
+    // the production loop: commit the four state frames after every
+    // batch and continue from the re-read snapshots
+    val store = new SnapshotStore(spark, Files.createTempDirectory("nelspark-inc").toString)
+    val conf = "parity"
+    def commitAll(s: Incremental.State): Incremental.State = Incremental.State(
+      store.commit("inc_mentions", s.mentions, conf)._2,
+      store.commit("inc_vecs", s.vecs, conf)._2,
+      store.commit("inc_edges", s.edges, conf)._2,
+      store.commit("inc_assignments", s.assignments, conf)._2)
+    val committed = bs.foldLeft(Incremental.empty(spark)) { (st, b) =>
+      commitAll(Incremental.processBatch(spark, st, b))
+    }
+
+    assert(committed.assignments.count() == inMemory.assignments.count())
+    assert(inMemory.assignments.count() > 0)
+    assert(checksum(committed.assignments) == checksum(inMemory.assignments))
   }
 }

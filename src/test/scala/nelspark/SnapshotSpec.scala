@@ -4,6 +4,7 @@ import nelspark.gen.CorpusGen
 import nelspark.pipeline.ErConfig
 import nelspark.store.{ResumablePipeline, SnapshotStore}
 import org.apache.spark.sql.functions._
+import java.io.File
 import java.nio.file.Files
 
 /** North-rule resumability: snapshot commit/replay, lineage + metrics
@@ -57,6 +58,27 @@ class SnapshotSpec extends SparkSpec {
     val store = new SnapshotStore(spark, root)
     // second config committed its own snapshots
     assert(store.snapshots.get.select("conf").distinct().count() == 2L)
+  }
+
+  test("a corrupt _snapshots log fails commit loudly and leaves snapshot=1 intact") {
+    val root = tmpRoot()
+    val store = new SnapshotStore(spark, root)
+    store.commit("stage", Seq(1L, 2L, 3L).toDF("x"), "c")
+    val snap = new File(s"$root/stage/snapshot=1")
+    def digest(dir: File): Map[String, String] =
+      dir.listFiles().map { f =>
+        f.getName -> java.security.MessageDigest.getInstance("MD5")
+          .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+      }.toMap
+    val before = digest(snap)
+
+    val log = new File(s"$root/_snapshots").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(log.nonEmpty)
+    log.foreach(f => Files.write(f.toPath, "not parquet".getBytes("UTF-8")))
+
+    intercept[Exception] { store.commit("stage", Seq(4L).toDF("x"), "c") }
+    assert(digest(snap) == before, "snapshot=1 must not be overwritten")
   }
 
   test("lineage and metrics tables are populated") {
