@@ -13,7 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *   time [repeats] [q1,q2,...]   — per-query noop-sink wall times
  *                                  (guide §1.4: compute every column, no
  *                                  count() pruning, no sink cost)
- *   pipeline [nPages nEntities]  — phase-decomposed flagship timing
+ *   count [repeats] [q1,q2,...]  — per-query min-of-N count() wall times
+ *   jobs [query] [reps]          — per-job and per-stage task-time breakdown
+ *   pipeline [nPages nEntities]  — per-stage flagship timing: each ER
+ *                                  stage persisted and counted once
  *
  * Env contract matches Bench: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
  */
@@ -46,62 +49,6 @@ object BenchExtra {
         val nPages = rest.headOption.map(_.toLong).getOrElse(2000L)
         val nEnt = if (rest.length > 1) rest(1).toLong else nPages / 5
         pipelinePhases(spark, nPages, nEnt)
-      case "cachedbg" :: _ =>
-        val gen = nelspark.gen.CorpusGen.generate(spark, 2000, 400).cache()
-        val cfg = nelspark.pipeline.ErConfig()
-        val pages = nelspark.gen.CorpusGen.pages(gen)
-        val gold = nelspark.gen.CorpusGen.gold(gen)
-        val res = nelspark.pipeline.Pipeline.run(spark, pages, gold, cfg)
-        def stat(n: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = df.queryExecution.executedPlan.toString
-          println(s"[cachedbg] $n: imts=${"InMemoryTableScan".r.findAllIn(p).size} " +
-            s"genscan=${"SerializeFromObject".r.findAllIn(p).size} " +
-            s"mentionscan=${"extract_mentions".r.findAllIn(p).size}")
-        }
-        stat("f1", res.f1)
-        stat("assignments", res.assignments)
-        val tns = new java.util.concurrent.atomic.AtomicLong
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.taskMetrics != null)
-              tns.addAndGet(te.taskMetrics.executorRunTime * 1000000L): Unit
-        })
-        def probe(n: String)(f: => Unit): Unit = {
-          org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-          tns.set(0)
-          val t0 = System.nanoTime()
-          f
-          org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-          println(f"[cachedbg] $n wall=${(System.nanoTime()-t0)/1e9}%.2f " +
-            f"task-s=${tns.get/1e9}%.2f")
-        }
-        probe("gold.count")(gold.count(): Unit)
-        probe("pages.count")(pages.count(): Unit)
-        probe("mentions.count")(res.mentions.count(): Unit)
-        probe("labeled.count")(
-          nelspark.pipeline.Evaluate.labeledMentions(res.mentions, gold).count(): Unit)
-        locally {
-          import org.apache.spark.sql.functions._
-          val extracted = nelspark.pipeline.Extract(pages)
-          val terms = extracted
-            .select(col("url"), explode(split(lower(col("text")), "\\s+")).as("term"))
-            .filter(length(col("term")) > 0)
-            .groupBy("url", "term").agg(count(lit(1)).cast("double").as("tf"))
-          probe("tf.count")(terms.count(): Unit)
-          val withDf = terms.withColumn("df", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("term")))
-          probe("withDf.count")(withDf.count(): Unit)
-          val topped = withDf
-            .withColumn("rk", row_number().over(org.apache.spark.sql.expressions
-              .Window.partitionBy("url").orderBy(desc("df"), asc("term"))))
-            .filter(col("rk") <= cfg.ctxTopK)
-          probe("topped.count")(topped.count(): Unit)
-        }
-        probe("vecs.count")(
-          nelspark.pipeline.Tfidf.pageVectors(
-            nelspark.pipeline.Extract(pages), cfg.ctxTopK).count(): Unit)
-        probe("f1.collect")(res.f1.collect(): Unit)
-        probe("f1.collect2")(res.f1.collect(): Unit)
       case "jobs" :: rest =>
         // run one query (default q_pipeline_f1) N times; after warmup,
         // print every Spark job's wall time + stage task totals — the
@@ -233,13 +180,14 @@ object BenchExtra {
       f"sum-job-wall=${rows.map(_._2).sum}%.2f s, task-time=${taskNs.get / 1e9}%.2f s")
   }
 
-  /** Flagship decomposition: time each pipeline phase with its own
-    * action so the 18s q_pipeline_f1 wall is attributable. */
+  /** Flagship decomposition: every stage boundary persists its stage and
+    * counts it as its own phase, so a phase never re-runs its upstream
+    * and the phases sum to the run (the persist/count barriers make the
+    * TOTAL larger than a fused run's wall). */
   private def pipelinePhases(spark: SparkSession, nPages: Long,
       nEntities: Long): Unit = {
     import nelspark.gen.CorpusGen
     import nelspark.pipeline._
-    import org.apache.spark.sql.functions.col
     val cfg = ErConfig()
     def ph[T](name: String)(f: => T): T = {
       spark.sparkContext.setJobDescription(s"phase:$name")
@@ -252,26 +200,21 @@ object BenchExtra {
     val total0 = System.nanoTime()
     val gen = CorpusGen.generate(spark, nPages, nEntities).cache()
     ph("generate+cache")(gen.count())
-    val pages = CorpusGen.pages(gen)
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val st = Pipeline.stages(CorpusGen.pages(gen), cfg)(new Pipeline.Boundary {
+      def apply(stage: String, compute: => DataFrame): DataFrame = ph(stage) {
+        val df = compute.persist()
+        df.count()
+        persisted += df
+        df
+      }
+    })
     val gold = CorpusGen.gold(gen)
-    val extracted = Extract(pages)
-    val mentions = Mentions(extracted, cfg).cache()
-    ph("mentions(cache)")(mentions.count())
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, _) = Block.pairs(keys, mentions, cfg)
-    val vecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
-    ph("pairs(noop)")(noop(pairs))
-    ph("vecs(noop)")(noop(vecs))
-    val scored = Score(pairs, mentions, vecs, cfg)
-    val edges = Score.edges(scored, cfg)
-    ph("edges(noop)")(noop(edges))
-    val assign = ph("cc")(Cluster.connectedComponents(
-      edges, mentions.select("mention_id"), cfg).cache())
-    ph("cc action")(assign.count())
-    val labeled = Evaluate.labeledMentions(mentions, gold)
-    val f1 = Evaluate.pairwiseF1(Evaluate.labeledPairs(labeled), assign)
+    val f1 = Evaluate.pairwiseF1(
+      Evaluate.labeledPairs(Evaluate.labeledMentions(st.mentions, gold)), st.clusters)
     ph("f1 collect")(f1.collect())
     println(f"[phase] TOTAL                  ${(System.nanoTime() - total0) / 1e9}%6.2f s")
-    gen.unpersist(); mentions.unpersist(); assign.unpersist()
+    persisted.foreach(_.unpersist())
+    gen.unpersist()
   }
 }

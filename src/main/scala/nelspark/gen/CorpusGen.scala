@@ -202,18 +202,16 @@ object CorpusGen {
   def gold(gen: Dataset[GenPage]): DataFrame =
     gen.toDF().select("url", "entity_id", "surface")
 
-  /** Materialize a fixture dir (pages.parquet + gold.parquet) once. */
+  /** Materialize a fixture dir (pages.parquet + gold.parquet), pinned by
+    * [[Fixtures.ensurePinned]]: regenerated when the params or the
+    * generator code change. */
   def ensureFixture(spark: SparkSession, dir: String, nPages: Long,
-      nEntities: Long, seed: Long = 42L): Unit = {
-    val done = new java.io.File(s"$dir/_DONE")
-    if (!done.exists()) {
+      nEntities: Long, seed: Long = 42L): Unit =
+    Fixtures.ensurePinned(dir, Fixtures.tag(s"corpus:$nPages:$nEntities:$seed")) { tmp =>
       val g = generate(spark, nPages, nEntities, seed)
       g.cache()
-      pages(g).write.mode("overwrite").parquet(s"$dir/pages.parquet")
-      gold(g).write.mode("overwrite").parquet(s"$dir/gold.parquet")
-      g.unpersist()
-      done.getParentFile.mkdirs()
-      java.nio.file.Files.writeString(done.toPath, "ok")
+      pages(g).write.parquet(s"$tmp/pages.parquet")
+      gold(g).write.parquet(s"$tmp/gold.parquet")
+      g.unpersist(): Unit
     }
-  }
 }

@@ -32,56 +32,54 @@ object Fixtures {
 
   /** Packages whose compiled code produces pinned-fixture CONTENT: the
     * expression kernels, the ANN trainers (LSH buckets / IVF Lloyd), the
-    * media header parsers, the CoNLL/TAC fixture writers, and this
-    * package's own generator closures. Round-5 ADVICE: hashing only
-    * nelspark/expr let edits to Ann.trainIvf or MediaOps silently keep
-    * serving stale pinned fixtures until the ":vN" params version was
-    * bumped by hand. */
+    * media header parsers, the CoNLL/TAC fixture writers, this package's
+    * own generator closures, and the ER stages that build the scaling
+    * bench's pre-staged mentions and vectors. Subpackages are included.
+    * Round-5 ADVICE: hashing only nelspark/expr let edits to
+    * Ann.trainIvf or MediaOps silently keep serving stale pinned
+    * fixtures until the ":vN" params version was bumped by hand. */
   private val kernelPackages = Seq("nelspark/expr/", "nelspark/ann/",
-    "nelspark/media/", "nelspark/sources/", "nelspark/gen/")
+    "nelspark/media/", "nelspark/sources/", "nelspark/gen/",
+    "nelspark/pipeline/")
 
   /** md5 over all compiled class bytes under [[kernelPackages]]
     * (sorted). Any recompile of fixture-producing code — even one
     * producing subtly different hashes — yields a new tag. Works from a
-    * classes dir (sbt) or a jar (spark-submit). */
+    * classes dir (sbt) or a jar (spark-submit): both select classes by
+    * the same prefix match on their relative path (subpackages included)
+    * and hash them in the same global order. */
   private lazy val kernelHash: String = {
+    import scala.jdk.CollectionConverters._
     val md = java.security.MessageDigest.getInstance("MD5")
     val loc = new File(nelspark.expr.Kernels.getClass
       .getProtectionDomain.getCodeSource.getLocation.toURI)
+    def wanted(name: String) =
+      kernelPackages.exists(name.startsWith) && name.endsWith(".class")
     if (loc.isDirectory) {
-      // sort by full relative path so dir and jar execution hash the
-      // class bytes in the same (global) order
-      kernelPackages.flatMap { pkg =>
-        val base = new File(loc, pkg)
-        Option(base.listFiles()).getOrElse(Array.empty[File])
-          .filter(_.getName.endsWith(".class"))
-          .map(f => (pkg + f.getName, f))
-      }.sortBy(_._1)
-        .foreach { case (_, f) => md.update(Files.readAllBytes(f.toPath)) }
+      val walk = Files.walk(loc.toPath)
+      try walk.iterator().asScala
+        .map(p => (loc.toPath.relativize(p).toString.replace(File.separatorChar, '/'), p))
+        .filter(x => wanted(x._1)).toSeq.sortBy(_._1)
+        .foreach { case (_, p) => md.update(Files.readAllBytes(p)) }
+      finally walk.close()
     } else {
       val zip = new java.util.zip.ZipFile(loc)
-      try {
-        import scala.jdk.CollectionConverters._
-        zip.entries().asScala
-          .filter(e => kernelPackages.exists(e.getName.startsWith) &&
-            e.getName.endsWith(".class"))
-          .toSeq.sortBy(_.getName)
-          .foreach { e =>
-            val is = zip.getInputStream(e)
-            try {
-              val buf = new Array[Byte](8192)
-              var r = is.read(buf)
-              while (r > 0) { md.update(buf, 0, r); r = is.read(buf) }
-            } finally is.close()
-          }
-      } finally zip.close()
+      try zip.entries().asScala.filter(e => wanted(e.getName)).toSeq
+        .sortBy(_.getName)
+        .foreach { e =>
+          val is = zip.getInputStream(e)
+          try md.update(is.readAllBytes()) finally is.close()
+        }
+      finally zip.close()
     }
     md.digest().map("%02x".format(_)).mkString
   }
 
   /** Stable fingerprint of the input parquet (file or dir): per-file
-    * name, length, mtime — regeneration of the testdata flips it. */
+    * name, length, mtime — regeneration of the testdata flips it. Empty
+    * for a fixture with no input (`path` empty). */
   private def inputMeta(path: String): String = {
+    if (path.isEmpty) return ""
     val f = new File(path)
     val files =
       if (f.isDirectory)
@@ -94,7 +92,7 @@ object Fixtures {
 
   /** The expected `_FIXTURE_TAG` value for (params, input). Exposed for
     * the staleness spec. */
-  def tag(params: String, inputPath: String): String = {
+  def tag(params: String, inputPath: String = ""): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(s"$params|$kernelHash|${inputMeta(inputPath)}"
       .getBytes("UTF-8"))
@@ -131,8 +129,9 @@ object Fixtures {
   }
 
   /** Validate-or-regenerate: `gen` writes the fixture parquet into the
-    * temp path it is handed; the tag sidecar is added and the whole dir
-    * atomically renamed into place. Returns `dir`. */
+    * temp path it is handed; once it returns, a root `_SUCCESS` (if the
+    * writer left none there) and the tag sidecar are added and the whole
+    * dir atomically renamed into place. Returns `dir`. */
   def ensurePinned(dir: String, tagValue: String)(gen: String => Unit): String = {
     if (!tagOk(dir, tagValue)) {
       val pid = ProcessHandle.current().pid()
@@ -148,6 +147,8 @@ object Fixtures {
         .foreach(rmTree)
       val tmp = s"$dir.tmp.$pid"
       gen(tmp)
+      if (!Files.exists(Paths.get(tmp, "_SUCCESS")))
+        Files.write(Paths.get(tmp, "_SUCCESS"), Array.empty[Byte])
       Files.write(Paths.get(tmp, "_FIXTURE_TAG"),
         tagValue.getBytes("UTF-8"))
       try {
@@ -267,9 +268,6 @@ object Fixtures {
         element_at(nelspark.functions.nearest_cells(col("n_emb"), cent, 1), 1)
           .as("cell"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/cells")
-      // parquet wrote _SUCCESS inside the subdirs; tagOk wants one at the
-      // fixture root
-      Files.write(Paths.get(tmp, "_SUCCESS"), Array.empty[Byte]): Unit
     }
 
   /** Decoded media metadata of the documents-as-video payload set (the
@@ -277,8 +275,9 @@ object Fixtures {
     * width, height, n_frames, sample_rate). Pinning it lets DuckDB
     * re-derive the frame-sampling PLAN (stride-30 indices capped at 16
     * frames) in closed form — the stub hash itself stays test-gated
-    * (MediaSpec), exactly like the minhash signatures. Same `:v1` caveat
-    * as ensureIvf: the tag's kernel hash does not cover MediaOps. */
+    * (MediaSpec), exactly like the minhash signatures. The tag's kernel
+    * hash covers nelspark/media, so a recompiled MediaOps regenerates it;
+    * `:v1` remains for intentional contract bumps, as in ensureIvf. */
   def ensureMediaMeta(spark: SparkSession, docsParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("media_meta:video:v1", docsParquet)) { tmp =>

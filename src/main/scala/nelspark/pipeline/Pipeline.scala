@@ -336,12 +336,6 @@ object Cluster {
       .dropDuplicates("a_id", "b_id")
   }
 
-  private def checksum(e: DataFrame): (Long, Long) = {
-    // bit_xor: order-independent, overflow-free (ANSI-safe) edge-set hash
-    val r = e.agg(count("*"), expr("bit_xor(xxhash64(a_id, b_id))")).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
   /** The alternating large/small-star fixpoint is exactly a star forest:
     * every child has ONE parent (count == distinct a_id) and no parent is
     * itself a child (b_id ∩ a_id = ∅). Both steps preserve component
@@ -488,33 +482,84 @@ object Evaluate {
   }
 }
 
-/** Orchestration: the full DAG in one call (checkpoint-aware variant in
-  * [[nelspark.store.SnapshotStore]] milestone). */
+/**
+ * The ER DAG, wired once:
+ *
+ * {{{
+ *   pages → extract ─┬→ mentions → pairs (+ block_metrics) ─┐
+ *                    └→ vecs ─────────────────────────────────┴→ scored → edges → clusters
+ * }}}
+ *
+ * [[stages]] builds every stage through a caller-supplied [[Boundary]],
+ * which decides what happens to each stage's output before later stages
+ * read it: return it as is (lazy), cache it, commit it to a
+ * [[nelspark.store.SnapshotStore]], or substitute a pre-staged copy.
+ * `compute` is by-name, so a boundary that substitutes a stored copy
+ * never builds that stage's plan — and never runs connected components,
+ * which is eager. Callers ([[run]], ResumablePipeline, the scaling bench,
+ * the plan dump, the phase timer) differ only in their boundary.
+ */
 object Pipeline {
   case class Result(mentions: DataFrame, assignments: DataFrame,
       metrics: DataFrame, f1: DataFrame)
 
+  /** What happens to one stage's output before later stages read it.
+    * Stage names, in call order: `extract`, `mentions`, `vecs`, `pairs`,
+    * `block_metrics`, `scored`, `edges`, `clusters`. */
+  trait Boundary {
+    def apply(stage: String, compute: => DataFrame): DataFrame
+  }
+
+  /** Every stage's output as its boundary returned it. */
+  case class Stages(extracted: DataFrame, mentions: DataFrame,
+      vecs: DataFrame, pairs: DataFrame, blockMetrics: DataFrame,
+      scored: DataFrame, edges: DataFrame, clusters: DataFrame)
+
+  def stages(pages: DataFrame, cfg: ErConfig = ErConfig())(at: Boundary): Stages = {
+    val extracted = at("extract", Extract(pages))
+    val mentions = at("mentions", Mentions(extracted, cfg))
+    val vecs = at("vecs", Tfidf.pageVectors(extracted, cfg.ctxTopK))
+    // lazy: built only if the boundary computes `pairs` or `block_metrics`
+    lazy val blocked = Block.pairs(Block.keys(mentions, cfg), mentions, cfg)
+    val pairs = at("pairs", blocked._1)
+    val blockMetrics = at("block_metrics", blocked._2)
+    val scored = at("scored", Score(pairs, mentions, vecs, cfg))
+    val edges = at("edges", Score.edges(scored, cfg))
+    val clusters = at("clusters",
+      Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg))
+    Stages(extracted, mentions, vecs, pairs, blockMetrics, scored, edges, clusters)
+  }
+
   def run(spark: SparkSession, pages: DataFrame, gold: DataFrame,
       cfg: ErConfig = ErConfig()): Result = {
-    val extracted = Extract(pages)
-    val mentions = Mentions(extracted, cfg).cache()
-    // Eager cache fill, ONE job, before the fan-out: downstream the DAG
-    // has ~8 independent AQE leaf stages (clique sides, mega tier, tfidf,
-    // eval join) that are submitted concurrently — against a COLD cache
-    // every one of them recomputes generation+extraction end to end
-    // (measured: 8 × ~15 task-s of duplicated work at 2k pages, >75% of
-    // the flagship's total CPU). One count() materializes mentions (and,
-    // transitively, any cached upstream corpus) exactly once.
-    mentions.count(): Unit
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, blockMetrics) = Block.pairs(keys, mentions, cfg)
-    val vecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
-    val scored = Score(pairs, mentions, vecs, cfg)
-    val edges = Score.edges(scored, cfg)
-    val assign = Cluster.connectedComponents(
-      edges, mentions.select("mention_id"), cfg).cache()
-    val labeled = Evaluate.labeledMentions(mentions, gold)
-    val f1 = Evaluate.pairwiseF1(Evaluate.labeledPairs(labeled), assign)
-    Result(mentions, assign, blockMetrics, f1)
+    val st = stages(pages, cfg)(new Boundary {
+      def apply(stage: String, compute: => DataFrame): DataFrame = stage match {
+        case "mentions" =>
+          // Eager cache fill, ONE job, before the fan-out: downstream the
+          // DAG has ~8 independent AQE leaf stages (clique sides, mega
+          // tier, tfidf, eval join) that are submitted concurrently —
+          // against a COLD cache every one of them recomputes
+          // generation+extraction end to end (measured: 8 × ~15 task-s of
+          // duplicated work at 2k pages, >75% of the flagship's total
+          // CPU). One count() materializes mentions (and, transitively,
+          // any cached upstream corpus) exactly once.
+          // `cache()` is MEMORY_AND_DISK: partitions that do not fit in
+          // storage memory go to local disk instead of being recomputed.
+          // Right while mentions fit in storage memory (a few MB at the
+          // flagship's 2k pages). Wrong at corpus scale: spilled
+          // partitions are deserialized once per consumer, the cache
+          // competes with shuffles and CC for executor memory, and it dies
+          // with its executor. There, commit mentions to parquet as
+          // ResumablePipeline does.
+          val m = compute.cache()
+          m.count(): Unit
+          m
+        case "clusters" => compute.cache()
+        case _ => compute
+      }
+    })
+    val labeled = Evaluate.labeledMentions(st.mentions, gold)
+    val f1 = Evaluate.pairwiseF1(Evaluate.labeledPairs(labeled), st.clusters)
+    Result(st.mentions, st.clusters, st.blockMetrics, f1)
   }
 }

@@ -43,10 +43,12 @@ object Conll {
       nDocs: Int = 100): String = {
     // Skip-if-current (optimization round 6): the fixture bytes are a
     // pure function of (params, input parquet, generator code) — the
-    // same self-validating tag contract as Fixtures.ensurePinned (`:v1`
-    // is the generator-code version; the kernel-hash component covers
-    // nelspark/expr only, so changes HERE must bump it). Previously every
-    // call re-collected the docs and rewrote the file.
+    // same self-validating tag contract as Fixtures.ensurePinned (the
+    // kernel-hash component covers every package in
+    // Fixtures.kernelPackages, this one included, so a recompile here
+    // regenerates the file; `:v1` remains for intentional contract
+    // bumps). Previously every call re-collected the docs and rewrote
+    // the file.
     val tagVal = nelspark.gen.Fixtures.tag(s"conll_tsv:v1:$nDocs", docsParquet)
     val tagPath = Paths.get(path + ".tag")
     if (Files.exists(Paths.get(path)) && Files.exists(tagPath) &&

@@ -101,37 +101,44 @@ object ResumablePipeline {
     java.lang.Long.toHexString(nelspark.expr.Kernels.hashString(cfg.toString + extra, 7L))
 
   /**
-   * Runs extract → mentions → pairs → edges → clusters with each stage
-   * committed as a snapshot. A rerun over the same store replays every
-   * committed stage (byte-identical outputs) and recomputes only missing
-   * or config-invalidated ones.
+   * Runs [[nelspark.pipeline.Pipeline.stages]] with extract, mentions,
+   * pairs, edges and clusters each committed as a snapshot, keyed by the
+   * config hash and the previous committed stage's snapshot id; vecs and
+   * scored stay lazy inside the stages that read them. A rerun over the
+   * same store replays every committed stage (byte-identical outputs) and
+   * recomputes only missing or config-invalidated ones. The four block
+   * metrics are recorded only when pairs are computed, not replayed.
    */
   def run(spark: SparkSession, store: SnapshotStore, pages: DataFrame,
       cfg: ErConfig = ErConfig()): DataFrame = {
     val ch = confHash(cfg)
-    val (exId, extracted) = store.runStage("extract", ch) { Extract(pages) }
-    val (meId, mentions) = store.runStage("mentions", ch, exId) {
-      Mentions(extracted, cfg)
-    }
-    val (prId, pairs) = store.runStage("pairs", ch, meId) {
-      val keys = Block.keys(mentions, cfg)
-      val (p, metricsDf) = Block.pairs(keys, mentions, cfg)
-      val m = metricsDf.head()
-      store.addMetric("pairs", meId, "n_blocks", m.getAs[Long]("n_blocks").toDouble)
-      store.addMetric("pairs", meId, "n_chained", m.getAs[Long]("n_chained").toDouble)
-      store.addMetric("pairs", meId, "n_purged", m.getAs[Long]("n_purged").toDouble)
-      store.addMetric("pairs", meId, "max_block", m.getAs[Long]("max_block").toDouble)
-      p
-    }
-    val (edId, edges) = store.runStage("edges", ch, prId) {
-      val vecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
-      Score.edges(Score(pairs, mentions, vecs, cfg), cfg)
-    }
-    val (clId, clusters) = store.runStage("clusters", ch, edId) {
-      Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)
-    }
-    store.addMetric("clusters", clId, "n_clusters",
-      clusters.select("cluster_id").distinct().count().toDouble)
-    clusters
+    var ids = Map.empty[String, Long] // snapshot id per committed stage
+    var input = -1L                   // the last committed stage's id
+    var pairsComputed = false
+    val st = Pipeline.stages(pages, cfg)(new Pipeline.Boundary {
+      def apply(stage: String, compute: => DataFrame): DataFrame = stage match {
+        case "vecs" | "scored" => compute
+        case "block_metrics" =>
+          val m = compute
+          if (pairsComputed) {
+            val r = m.head()
+            Seq("n_blocks", "n_chained", "n_purged", "max_block").foreach { n =>
+              store.addMetric("pairs", ids("mentions"), n, r.getAs[Long](n).toDouble)
+            }
+          }
+          m
+        case _ =>
+          val (id, df) = store.runStage(stage, ch, input) {
+            if (stage == "pairs") pairsComputed = true
+            compute
+          }
+          ids += stage -> id
+          input = id
+          df
+      }
+    })
+    store.addMetric("clusters", ids("clusters"), "n_clusters",
+      st.clusters.select("cluster_id").distinct().count().toDouble)
+    st.clusters
   }
 }

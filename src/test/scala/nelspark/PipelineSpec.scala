@@ -140,6 +140,74 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("a boundary that never forces compute builds no stage and runs no job") {
+    // Extract(noHtml) would throw AnalysisException if it were built
+    val noHtml = pages.drop("html")
+    val canned = Seq((1L, 1L)).toDF("mention_id", "cluster_id")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sc = spark.sparkContext
+    val probeGroup = "stages-by-name-probe"
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            probeGroup == j.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(probeGroup, "Pipeline.stages by-name probe")
+    try {
+      val st = Pipeline.stages(noHtml)(new Pipeline.Boundary {
+        def apply(stage: String, compute: => org.apache.spark.sql.DataFrame) = {
+          seen += stage
+          canned
+        }
+      })
+      org.apache.spark.sql.NelShim.waitForListenerBus(spark)
+      assert(jobs.get == 0, s"stages launched ${jobs.get} job(s)")
+      assert(seen.toSeq == Seq("extract", "mentions", "vecs", "pairs",
+        "block_metrics", "scored", "edges", "clusters"))
+      assert(st.clusters eq canned)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("scaling-bench inputs: a legacy _DONE-only or stale-tag pre-stage regenerates") {
+    import java.nio.file.{Files, Paths}
+    val fixDir = Files.createTempDirectory("nelspark-bench").resolve("bench_200").toString
+    val cfg = ErConfig()
+    val pre = Main.stageBenchInputs(spark, fixDir, 200L, cfg)
+    def mentionsDigest(): (Long, Long) = {
+      val r = spark.read.parquet(s"$pre/mentions.parquet")
+        .agg(count(lit(1)), expr("bit_xor(mention_id)")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val fresh = mentionsDigest()
+    assert(fresh._1 > 0L)
+    val tagPath = Paths.get(pre, "_FIXTURE_TAG")
+    val goodTag = Files.readString(tagPath)
+    def parts() = new java.io.File(s"$pre/mentions.parquet").listFiles()
+      .map(f => f.getName -> f.lastModified).toMap
+    // a current pre-stage is reused as is
+    val before = parts()
+    Main.stageBenchInputs(spark, fixDir, 200L, cfg)
+    assert(parts() == before, "current pre-stage was rewritten")
+    // the old layout: a dir carrying only the untagged _DONE marker
+    new scala.reflect.io.Directory(new java.io.File(pre)).deleteRecursively()
+    Files.createDirectories(Paths.get(pre))
+    Files.writeString(Paths.get(pre, "_DONE"), "ok")
+    Main.stageBenchInputs(spark, fixDir, 200L, cfg)
+    assert(Files.readString(tagPath) == goodTag && mentionsDigest() == fresh)
+    assert(!new java.io.File(pre, "_DONE").exists())
+    // a tag written by other pipeline code (or another config)
+    Files.writeString(tagPath, "stale-pipeline-tag")
+    Main.stageBenchInputs(spark, fixDir, 200L, cfg)
+    assert(Files.readString(tagPath) == goodTag && mentionsDigest() == fresh)
+    assert(parts() != before, "stale pre-stage was reused")
+  }
+
   test("block metrics report chained/purged tiers") {
     val m = result.metrics.head()
     assert(m.getAs[Long]("n_blocks") > 0)

@@ -1,7 +1,7 @@
 package nelspark
 
 import nelspark.gen.CorpusGen
-import nelspark.pipeline.ErConfig
+import nelspark.pipeline.{ErConfig, Pipeline}
 import nelspark.store.{ResumablePipeline, SnapshotStore}
 import org.apache.spark.sql.functions._
 import java.io.File
@@ -46,6 +46,14 @@ class SnapshotSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap
     assert(after("extract") == 1L && after("mentions") == 1L && after("pairs") == 1L)
     assert(after("edges") == 2L && after("clusters") == 2L)
+
+    // batch and resumable wire the same DAG: same clusters
+    def digest(a: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = a.agg(count(lit(1)), expr("bit_xor(xxhash64(mention_id, cluster_id))")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val batch = Pipeline.run(spark, pages, CorpusGen.gold(gen)).assignments
+    assert(digest(batch) == digest(run1.toDF("mention_id", "cluster_id")))
   }
 
   test("config change invalidates snapshots (conf-hash keyed)") {
