@@ -100,11 +100,12 @@ object Ranker {
       .select(col("p_prior"), col("p_name"), col("ctx_cos"),
         (col("entity_id") === col("gold_ent")).as("y"))
 
-    // one shifted negative per mention; intentionally single-partition —
-    // it runs on the capped sample only (lit(0) partition = documented
-    // intent, no spurious WindowExec warning)
-    val wOrd = Window.partitionBy(lit(0))
-      .orderBy(xxhash64(col("mention_id")), col("mention_id"))
+    // one shifted negative per mention over one global order, so the
+    // window runs in a single partition on purpose: the sample is capped
+    // at maxSample rows. Spark logs its WindowExec single-partition
+    // warning for it; a literal partition key would not avoid that, since
+    // the optimizer (EliminateWindowPartitions) drops foldable keys.
+    val wOrd = Window.orderBy(xxhash64(col("mention_id")), col("mention_id"))
     val negPairs = m
       .withColumn("neg_ent", coalesce(lead(col("gold_ent"), 1).over(wOrd),
         first(col("gold_ent")).over(wOrd)))

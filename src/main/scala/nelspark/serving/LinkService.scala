@@ -45,16 +45,17 @@ object LinkService {
       else tf * (math.log((nDocs + 1.0) / (termDf.getOrElse(t, 0L) + 1.0)) + 1.0)
 
     /** Same feature/score shape as Linker.link, one mention at a time:
-      * candidates from the alias store, prior + P(e|name) + context
+      * the top `w.topN` candidates by P(e|name) from the alias store
+      * (the batch cutoff, same tie order), prior + P(e|name) + context
       * cosine features, weighted combine, argmax with min-id tie-break,
       * NIL below tauNil. */
     def link(name: String, contextText: String): Resolution = {
       val nameNorm = Kernels.normalizeName(name)
-      val cands = nameProb.getOrElse(nameNorm, Array.empty[(Long, Double)])
+      val cands = nameProb.getOrElse(nameNorm, Array.empty[(Long, Double)]).take(w.topN)
       if (cands.isEmpty) return Resolution(name, nameNorm, None, 0.0, isNil = true)
       // L2-normalized context vector of the request doc (tf-idf when a
       // term_df table is loaded — the batch page-vector weighting)
-      val tf = contextText.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      val tf = contextText.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
         .groupBy(identity).map { case (t, xs) =>
           t -> termWeight(t, xs.length.toDouble) }
       val nrm = math.sqrt(tf.values.map(x => x * x).sum)

@@ -23,6 +23,18 @@ class IncrementalSpec extends SparkSpec {
   private def batches(pages: DataFrame, n: Int): Seq[DataFrame] =
     (0 until n).map(b => pages.filter(pmod(xxhash64(col("url")), lit(n)) === b))
 
+  /** The production loop's step: commit the four state frames and
+    * continue from the re-read snapshots. */
+  private def commitAll(store: SnapshotStore, s: Incremental.State): Incremental.State =
+    Incremental.State(
+      store.commit("inc_mentions", s.mentions, "c")._2,
+      store.commit("inc_vecs", s.vecs, "c")._2,
+      store.commit("inc_edges", s.edges, "c")._2,
+      store.commit("inc_assignments", s.assignments, "c")._2)
+
+  private def tmpStore(): SnapshotStore =
+    new SnapshotStore(spark, Files.createTempDirectory("nelspark-inc").toString)
+
   test("two micro-batches equal one full run (same clusters)") {
     val gen = CorpusGen.generate(spark, 800L, 160L).cache()
     val pages = CorpusGen.pages(gen).cache()
@@ -74,6 +86,11 @@ class IncrementalSpec extends SparkSpec {
       assert(sizes(9)(i) <= 2 * sizes(4)(i),
         s"$f plan grew superlinearly: ${sizes(4)(i)} nodes at batch 5, ${sizes(9)(i)} at batch 10")
     }
+    // vecs and edges come back as leaves: chaining does not grow them
+    Seq("vecs" -> 1, "edges" -> 2).foreach { case (f, i) =>
+      assert(sizes(9)(i) == sizes(4)(i),
+        s"$f plan grew: ${sizes(4)(i)} nodes at batch 5, ${sizes(9)(i)} at batch 10")
+    }
 
     val nAssigned = st.assignments.count()
     val nDistinct = st.assignments.select("mention_id").distinct().count()
@@ -92,21 +109,30 @@ class IncrementalSpec extends SparkSpec {
       Incremental.processBatch(spark, st, b)
     }
 
-    // the production loop: commit the four state frames after every
-    // batch and continue from the re-read snapshots
-    val store = new SnapshotStore(spark, Files.createTempDirectory("nelspark-inc").toString)
-    val conf = "parity"
-    def commitAll(s: Incremental.State): Incremental.State = Incremental.State(
-      store.commit("inc_mentions", s.mentions, conf)._2,
-      store.commit("inc_vecs", s.vecs, conf)._2,
-      store.commit("inc_edges", s.edges, conf)._2,
-      store.commit("inc_assignments", s.assignments, conf)._2)
+    val store = tmpStore()
     val committed = bs.foldLeft(Incremental.empty(spark)) { (st, b) =>
-      commitAll(Incremental.processBatch(spark, st, b))
+      commitAll(store, Incremental.processBatch(spark, st, b))
     }
 
     assert(committed.assignments.count() == inMemory.assignments.count())
     assert(inMemory.assignments.count() > 0)
     assert(checksum(committed.assignments) == checksum(inMemory.assignments))
+  }
+
+  test("one micro-batch and its four commits run a bounded number of Spark jobs") {
+    val gen = CorpusGen.generate(spark, 400L, 80L).cache()
+    val pages = CorpusGen.pages(gen).cache()
+    val Seq(b1, b2) = batches(pages, 2)
+    val store = tmpStore()
+    val st1 = commitAll(store, Incremental.processBatch(spark, Incremental.empty(spark), b1))
+    b2.count()
+
+    val (st2, batchJobs) = jobsOf(Incremental.processBatch(spark, st1, b2))
+    val (_, commitJobs) = jobsOf(commitAll(store, st2))
+    info(s"jobs: processBatch $batchJobs, four commits $commitJobs")
+    // measured 36-37 + 12; the unshared plans (two copies of the blocker,
+    // a full-state re-cluster) and the schema-inferring commits ran 52 + 42
+    assert(commitJobs <= 12, s"four commits ran $commitJobs jobs")
+    assert(batchJobs + commitJobs <= 55, s"$batchJobs + $commitJobs jobs")
   }
 }

@@ -116,28 +116,10 @@ class PipelineSpec extends SparkSpec {
   test("Tfidf.pageVectors launches no job at DAG-construction time") {
     val ex = Extract(pages)
     ex.count() // materialize inputs first — the probe targets pageVectors only
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sc = spark.sparkContext
-    // job-group id is thread-local and stamped into each job's properties,
-    // so concurrent suites sharing the session don't pollute the count
-    val probeGroup = "tfidf-construct-probe"
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            probeGroup == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(probeGroup, "pageVectors construction probe")
-    try {
-      val df = Tfidf.pageVectors(ex) // an eager head()/count() here would fire a job
-      org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-      assert(jobs.get == 0, s"plan construction launched ${jobs.get} job(s)")
-      assert(df.columns.toSeq == Seq("url", "hs", "ws"))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    // an eager head()/count() in pageVectors would fire a job
+    val (df, jobs) = jobsOf(Tfidf.pageVectors(ex))
+    assert(jobs == 0, s"plan construction launched $jobs job(s)")
+    assert(df.columns.toSeq == Seq("url", "hs", "ws"))
   }
 
   test("a boundary that never forces compute builds no stage and runs no job") {
@@ -145,33 +127,16 @@ class PipelineSpec extends SparkSpec {
     val noHtml = pages.drop("html")
     val canned = Seq((1L, 1L)).toDF("mention_id", "cluster_id")
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sc = spark.sparkContext
-    val probeGroup = "stages-by-name-probe"
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            probeGroup == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(probeGroup, "Pipeline.stages by-name probe")
-    try {
-      val st = Pipeline.stages(noHtml)(new Pipeline.Boundary {
-        def apply(stage: String, compute: => org.apache.spark.sql.DataFrame) = {
-          seen += stage
-          canned
-        }
-      })
-      org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-      assert(jobs.get == 0, s"stages launched ${jobs.get} job(s)")
-      assert(seen.toSeq == Seq("extract", "mentions", "vecs", "pairs",
-        "block_metrics", "scored", "edges", "clusters"))
-      assert(st.clusters eq canned)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    val (st, jobs) = jobsOf(Pipeline.stages(noHtml)(new Pipeline.Boundary {
+      def apply(stage: String, compute: => org.apache.spark.sql.DataFrame) = {
+        seen += stage
+        canned
+      }
+    }))
+    assert(jobs == 0, s"stages launched $jobs job(s)")
+    assert(seen.toSeq == Seq("extract", "mentions", "vecs", "pairs",
+      "block_metrics", "scored", "edges", "clusters"))
+    assert(st.clusters eq canned)
   }
 
   test("scaling-bench inputs: a legacy _DONE-only or stale-tag pre-stage regenerates") {

@@ -2,6 +2,7 @@ package nelspark
 
 import nelspark.pipeline.Linker
 import nelspark.serving.LinkService
+import org.apache.spark.sql.functions._
 
 /** SNK3 serving surface: driver-resident model maps + JDK HTTP server;
   * same kernels and score shape as the batch linker, no Spark job per
@@ -81,6 +82,30 @@ class ServingSpec extends SparkSpec {
     // vector, so entity 1 wins despite equal name prob and prior
     val r = m.link("X", "rare common")
     assert(r.entityId.contains(1L), r.toString)
+  }
+
+  test("serving links like batch Linker.link: top-N candidates, Locale.ROOT context") {
+    // ten candidates for one name; the one whose context matches ranks
+    // last by P(e|name), outside the default top 8
+    val nameProb = (1L to 10L).map(e => ("x", e, (11 - e) / 55.0))
+      .toDF("name_norm", "entity_id", "p")
+    val prior = (1L to 10L).map(e => (e, 0.1)).toDF("entity_id", "p")
+    val tfidf = Seq((10L, "iran", 1.0)).toDF("entity_id", "term", "w")
+    val w = Linker.Weights(prior = 0.0, nameProb = 0.1, ctx = 1.0, tauNil = 0.0)
+    val batch = Linker.link(Seq((1L, "u1", "x")).toDF("mention_id", "url", "name_norm"),
+      Seq(("u1", "iran", 1.0)).toDF("url", "term", "w"),
+      nameProb.select(col("name_norm"), col("entity_id"), lit(1L).as("cnt")),
+      prior, nameProb, tfidf, w).select("entity_id").as[Long].head()
+    val served = LinkService.buildModel(nameProb, prior, tfidf, w).link("X", "iran")
+    assert(batch == 1L && served.entityId.contains(batch), s"batch $batch, serving $served")
+
+    // with every candidate scored, the context decides, whatever the
+    // JVM's default locale ("IRAN" lowercases to "ıran" under Turkish)
+    val all = LinkService.buildModel(nameProb, prior, tfidf, w.copy(topN = 10))
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    val r = try all.link("X", "IRAN") finally java.util.Locale.setDefault(saved)
+    assert(r.entityId.contains(10L), r.toString)
   }
 
   test("buildModel refuses corpus-scale tables") {

@@ -101,5 +101,21 @@ class SnapshotSpec extends SparkSpec {
     val met = store.metrics.get
     assert(met.filter(col("name") === "n_clusters").count() == 1L)
     assert(met.filter(col("stage") === "pairs").count() >= 4L)
+
+    // every snapshot: lineage rows, the log's row_count and the data agree
+    val (id, back) = store.commit("direct", Seq(1L, 2L, 3L).toDF("x").repartition(2), "c")
+    val rowsOut = lin.unionByName(store.lineage.get.filter(col("stage") === "direct"))
+      .groupBy("stage", "snapshot_id").agg(sum("rows_out").as("rows_out"))
+    val logged = store.snapshots.get
+      .join(rowsOut, Seq("stage", "snapshot_id"), "left")
+      .select("stage", "snapshot_id", "row_count", "rows_out")
+      .as[(String, Long, Long, Option[Long])].collect()
+    assert(logged.length == 6)
+    logged.foreach { case (stage, sid, rowCount, out) =>
+      val reread = spark.read.parquet(s"$root/$stage/snapshot=$sid").count()
+      assert(out.contains(rowCount) && rowCount == reread,
+        s"$stage/$sid: lineage $out, row_count $rowCount, re-read $reread")
+    }
+    assert(id == 1L && back.count() == 3L)
   }
 }

@@ -23,6 +23,30 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** `body`'s result and the number of Spark jobs it started. The job
+    * group is thread-local and stamped into each job's properties, so
+    * other suites sharing the SparkSession do not add to the count. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsOf")
+    try {
+      val r = body
+      org.apache.spark.sql.NelShim.waitForListenerBus(spark)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Run a ScalaCheck property with a fixed seed (deterministic CI). */
   def checkProp(p: org.scalacheck.Prop, n: Int = 100): Unit = {
     val params = org.scalacheck.Test.Parameters.default
